@@ -522,31 +522,22 @@ object EventOps {
     * repeat/parallelize. AVG-style aggregates ride the same path as
     * (sum, count) pairs finalized at read time. */
   def incrAgg(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val ev = Tables.events(spark, dir)
       .select(col("event_type"), col("ts"),
         col("value").cast("decimal(38,18)").as("v"))
     val cutoff = to_timestamp(lit(IncrAggCutoff))
-    val base = Paths.get(graft.sources.IndexCatalog.cacheBase(dir))
-    val mv = base.resolve("incragg-mv-v1")
-    if (!Files.exists(mv)) {
-      Files.createDirectories(base)
-      // build into a unique temp dir, then atomically install: concurrent
-      // builders (bench + verify on one sfDir) must never interleave part
-      // files into the shared location — the loser's rename fails and its
-      // build is discarded (deterministic content, so nothing is lost)
-      val tmp = Files.createTempDirectory(base, "incragg-mv-build")
+    val mv = java.nio.file.Paths.get(
+      graft.sources.IndexCatalog.cacheBase(dir), "incragg-mv-v1")
+    // publish-if-absent: concurrent builders (bench + verify on one
+    // sfDir) must never interleave part files into the shared location —
+    // the loser's rename fails and its build is discarded (deterministic
+    // content, so nothing is lost)
+    graft.sources.Maintenance.publishIfAbsent(mv)(
       ev.filter(col("ts") < cutoff)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      try Files.move(tmp, mv, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException if Files.exists(mv) =>
-          graft.sources.Maintenance.deleteRecursively(tmp)
-      }
-    }
+        .write.mode("overwrite").parquet(_))
     val stored = spark.read.parquet(mv.toString)
     val delta = ev.filter(col("ts") >= cutoff)
       .groupBy(col("event_type"))
@@ -589,25 +580,16 @@ object EventOps {
     * #days × sketch-size. Union cost is #sketches, independent of row
     * count — the whole point at 100 TB. */
   def incrDistinct(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val ev = Tables.events(spark, dir)
       .select(date_format(col("ts"), "yyyy-MM-dd").as("day"), col("user_id"))
-    val base = Paths.get(graft.sources.IndexCatalog.cacheBase(dir))
-    val mv = base.resolve("hlldistinct-mv-v1")
-    if (!Files.exists(mv)) {
-      Files.createDirectories(base)
-      val tmp = Files.createTempDirectory(base, "hlldistinct-mv-build")
+    val mv = java.nio.file.Paths.get(
+      graft.sources.IndexCatalog.cacheBase(dir), "hlldistinct-mv-v1")
+    graft.sources.Maintenance.publishIfAbsent(mv)(
       ev.filter(col("day") < IncrAggCutoff)
         .groupBy(col("day"))
         .agg(hll_sketch_agg(col("user_id")).as("sk"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      try Files.move(tmp, mv, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException if Files.exists(mv) =>
-          graft.sources.Maintenance.deleteRecursively(tmp)
-      }
-    }
+        .write.mode("overwrite").parquet(_))
     val stored = spark.read.parquet(mv.toString)
     val delta = ev.filter(col("day") >= IncrAggCutoff)
       .groupBy(col("day"))

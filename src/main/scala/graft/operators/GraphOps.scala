@@ -1118,7 +1118,7 @@ object GraphOps {
     * between nodes sharing a top-2 bucket, hence every src the batch can
     * affect lives in a bucket adjacent to the batch's memberships, and
     * the rewrite is a touched-bucket dynamic overwrite (the
-    * IndexCatalog.overwritePartitions discipline, emptied dirs removed),
+    * Maintenance.overwritePartitions protocol, emptied dirs removed),
     * never a full-graph rewrite. Deletes apply before adds (the lexical
     * CDC ordering); the whole trigger is idempotent behind a
     * `_stream_commits/<batchId>` marker. The members sidecar (the ids
@@ -1195,8 +1195,8 @@ object GraphOps {
     // The final membership is materialized BEFORE the delta loop (one
     // checkpoint cuts its dependency on the members files) so its staged
     // write overlaps the edge/reverse rewrites below (Par, guide §2.6) —
-    // the three stores are disjoint, and only the store SWAP (delete +
-    // move, plain fs ops) must wait for the loop, whose delta frames
+    // the three stores are disjoint, and only the store SWAP (two
+    // renames, plain fs ops) must wait for the loop, whose delta frames
     // still read the old members files.
     val mem = members.localCheckpoint(eager = true)
     def applyDelta(drop: DataFrame, freshEdges: DataFrame): Unit = {
@@ -1223,25 +1223,14 @@ object GraphOps {
         // ITERATIONS stay sequential: the second delta re-reads the
         // edge store the first one rewrote.
         graft.operators.Par.run(Seq(
-          () => {
-            val out = current
+          () => graft.sources.Maintenance.overwritePartitions(edgesPath,
+            "sbucket", touched,
+            current
               .filter(col("sbucket").isin(touched: _*))
               .join(broadcast(drop), Seq("src"), "left_anti")
               .select(col("src"), col("dst"), col("sbucket"))
               .unionByName(freshEdges.join(a1, Seq("src"))
-                .select(col("src"), col("dst"), col("sbucket")))
-              .repartition(col("sbucket"))
-              .localCheckpoint(eager = true) // cut lineage off the overwritten files
-            val written = out.select(col("sbucket")).distinct()
-              .collect().map(_.getInt(0)).toSet
-            out.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("sbucket").parquet(edgesPath)
-            touched.filterNot(written.contains).foreach { b =>
-              graft.sources.Maintenance.deleteRecursively(
-                root.resolve("edges").resolve(s"sbucket=$b"))
-            }
-          },
+                .select(col("src"), col("dst"), col("sbucket")))),
           () => {
             // reverse sidecar follows the edge store: every changed edge's
             // reverse row lives in its DST's bucket, so the rewrite is a
@@ -1255,36 +1244,27 @@ object GraphOps {
               .join(a1d, Seq("dst"))
               .select(col("dbucket")).distinct()
               .collect().map(_.getInt(0)).sorted.toIndexedSeq
-            if (revTouched.nonEmpty) {
-              val revOut = spark.read.parquet(revPath)
-                .filter(col("dbucket").isin(revTouched: _*))
-                .join(broadcast(drop), Seq("src"), "left_anti")
-                .select(col("dst"), col("src"), col("dbucket"))
-                .unionByName(freshEdges.join(a1d, Seq("dst"))
-                  .select(col("dst"), col("src"), col("dbucket")))
-                .repartition(col("dbucket"))
-                .localCheckpoint(eager = true)
-              val revWritten = revOut.select(col("dbucket")).distinct()
-                .collect().map(_.getInt(0)).toSet
-              revOut.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("dbucket").parquet(revPath)
-              revTouched.filterNot(revWritten.contains).foreach { b =>
-                graft.sources.Maintenance.deleteRecursively(
-                  root.resolve("redges").resolve(s"dbucket=$b"))
-              }
-            }
+            if (revTouched.nonEmpty)
+              graft.sources.Maintenance.overwritePartitions(revPath,
+                "dbucket", revTouched,
+                spark.read.parquet(revPath)
+                  .filter(col("dbucket").isin(revTouched: _*))
+                  .join(broadcast(drop), Seq("src"), "left_anti")
+                  .select(col("dst"), col("src"), col("dbucket"))
+                  .unionByName(freshEdges.join(a1d, Seq("dst"))
+                    .select(col("dst"), col("src"), col("dbucket"))))
           }),
           parallelism = 2)
       }
     }
-    graft.operators.Par.run(Seq(
-      () => deltas.foreach { case (drop, freshEdges) => applyDelta(drop, freshEdges) },
-      () => mem.coalesce(1).write.mode("overwrite")
-        .parquet(membersPath + ".staged")),
-      parallelism = 2)
-    graft.sources.Maintenance.deleteRecursively(root.resolve("members"))
-    Files.move(root.resolve("members.staged"), root.resolve("members"))
+    // the staged replace's write step runs the delta loop beside the
+    // members stage, so the swap lands only after both finished
+    graft.sources.Maintenance.replace(root.resolve("members")) { stage =>
+      graft.operators.Par.run(Seq(
+        () => deltas.foreach { case (drop, freshEdges) => applyDelta(drop, freshEdges) },
+        () => mem.coalesce(1).write.mode("overwrite").parquet(stage)),
+        parallelism = 2)
+    }
     Files.writeString(marker, "")
   }
 

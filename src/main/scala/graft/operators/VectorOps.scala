@@ -1016,26 +1016,13 @@ object VectorOps {
     val root = Paths.get(base, "emb-sq8")
     val marker = root.resolve("_sq8_index.json")
     if (!Files.exists(marker)) {
-      Files.createDirectories(root)
-      // STAGE + atomic publish (the ensureLens v4 protocol): two
-      // concurrent first callers — e.g. parallel sessions over the same
-      // shared SF cache — never interleave mode=overwrite writes into
-      // the final path; the loser's rename finds the store published and
-      // stands down, so a reader can never see a partial code store
-      val staged = root.resolve("data.staged")
-      graft.sources.Maintenance.deleteRecursively(staged)
-      sq8Quantized(Tables.embeddings(spark, dir))
-        .select(col("vec_id"), col("label"),
-          col("qv").cast("array<tinyint>").as("qcode"), col("qnorm"))
-        .repartition(col("label"))
-        .write.mode("overwrite").partitionBy("label")
-        .parquet(staged.toString)
-      try Files.move(staged, root.resolve("data"))
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: java.nio.file.DirectoryNotEmptyException =>
-          graft.sources.Maintenance.deleteRecursively(staged)
-      }
+      // publish-if-absent: two concurrent first callers — e.g. parallel
+      // sessions over the same shared SF cache — never interleave
+      // mode=overwrite writes into the final path; the loser's rename
+      // finds the store published and stands down, so a reader can never
+      // see a partial code store
+      graft.sources.Maintenance.publishIfAbsent(root.resolve("data"))(
+        writeSq8(spark, dir))
       if (!Files.exists(marker))
         Files.writeString(marker, """{"name": "emb-sq8", "kind": "sq8", "bits": 8}""")
     }
@@ -1067,22 +1054,21 @@ object VectorOps {
   /** REPAIR for a persisted SQ8 code store: a code row is a pure per-row
     * function of the stored vector (no codebook to retrain), so recovery
     * from code drift — the audit's sq8_codes_match_vectors finding — is
-    * one re-encode of the vector primary, staged beside the store and
-    * atomically swapped in (the ensureSq8 publish discipline, applied to
-    * recovery). */
+    * one re-encode of the vector primary — the derivation [[ensureSq8]]
+    * publishes — swapped in by the staged Maintenance.replace. */
   private[graft] def rebuildSq8(spark: SparkSession, dir: String,
-                                storePath: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val staged = Paths.get(storePath + ".staged")
-    graft.sources.Maintenance.deleteRecursively(staged)
+                                storePath: String): Unit =
+    graft.sources.Maintenance.replace(java.nio.file.Paths.get(storePath))(
+      writeSq8(spark, dir))
+
+  /** Encode every stored vector into `dest` — the one SQ8 code-store
+    * derivation the build and the repair share. */
+  private def writeSq8(spark: SparkSession, dir: String)(dest: String): Unit =
     sq8Quantized(Tables.embeddings(spark, dir))
       .select(col("vec_id"), col("label"),
         col("qv").cast("array<tinyint>").as("qcode"), col("qnorm"))
       .repartition(col("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(staged.toString)
-    graft.sources.Maintenance.deleteRecursively(Paths.get(storePath))
-    Files.move(staged, Paths.get(storePath))
-  }
+      .write.mode("overwrite").partitionBy("label").parquet(dest)
 
   /** Q-sq8-persisted: [[sq8Knn]] served from the persisted INT8 store —
     * identical results (SHARED oracle), different access path: the

@@ -52,9 +52,10 @@ object FormatRoundtrip {
   private[sources] def exportPath(dir: String, name: String) =
     Paths.get(IndexCatalog.cacheBase(dir), s"fmt-$name-$Version")
 
-  /** Write through `write` once per dataset. The closure writes into a
-    * UNIQUE staging directory which is atomically renamed to `data` —
-    * so multi-step writers (schemaEvolution's overwrite-then-append) are
+  /** Write through `write` once per dataset, via
+    * [[Maintenance.publishIfAbsent]]: the closure writes into a UNIQUE
+    * staging directory which is atomically renamed to `data` — so
+    * multi-step writers (schemaEvolution's overwrite-then-append) are
     * safe under concurrent builders: interleaved steps can never land in
     * the published directory, only one complete staging dir wins the
     * rename, and the loser discards its own. The `_ok` marker is
@@ -67,23 +68,7 @@ object FormatRoundtrip {
     val data = base.resolve("data")
     val ok = base.resolve("_ok")
     if (!Files.exists(ok)) {
-      Files.createDirectories(base)
-      val stage = Files.createTempDirectory(base, "stage-")
-      try {
-        write(stage.toString)
-        try
-          Files.move(stage, data, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          // a concurrent builder's (identical-bytes) rename won; drop ours
-          case _: java.nio.file.FileAlreadyExistsException
-             | _: java.nio.file.DirectoryNotEmptyException =>
-            Maintenance.deleteRecursively(stage)
-        }
-      } catch {
-        // a failed write must not leak its stage- dir under the published
-        // base (the next attempt would still rebuild — no _ok was written)
-        case e: Throwable => Maintenance.deleteRecursively(stage); throw e
-      }
+      Maintenance.publishIfAbsent(data)(write)
       Files.writeString(ok, "ok")
     }
     data.toString

@@ -280,7 +280,7 @@ object IncrementalAudit {
     // added to one store only, a dead key it dropped from one store
     // only, and a stored len disagreeing with its own key). Coverage
     // needs no lex-side inventory: every lex write is PAIRED with a
-    // dict write (mergeLexPartitions runs inside mergeDictBuckets;
+    // dict write (mergeKeySetPartitions runs inside mergeDictBuckets;
     // build/rebuild write both), so the dict's touched set + the term
     // refresher sweep the pair.
     val lexPath = InvertedIndex.dictLexPathOf(layout)

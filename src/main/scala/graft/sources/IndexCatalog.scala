@@ -243,8 +243,10 @@ object IndexCatalog {
   private def keymapDir(basePath: String, name: String) =
     Paths.get(basePath, name, "keymap")
 
+  private val KeymapMarkerName = "_keymap.json"
+
   private def keymapMarker(basePath: String, name: String) =
-    keymapDir(basePath, name).resolve("_keymap.json")
+    keymapDir(basePath, name).resolve(KeymapMarkerName)
 
   /** KEY→PARTITION sidecar — `keymap/kbucket=<b>/` rows of
     * (keyCol, partition values as strings), partitioned by a key hash.
@@ -307,7 +309,7 @@ object IndexCatalog {
     * new locations would hide stale rows from later discovery. The next
     * maintenance call backfills from the rewritten data. */
   def dropKeymap(basePath: String, name: String): Unit =
-    deleteTree(keymapDir(basePath, name))
+    Maintenance.deleteRecursively(keymapDir(basePath, name))
 
   /** Backfill the keymap for an index built before it existed (or whose
     * backfill was killed mid-write) — ONE column-pruned scan of the
@@ -328,8 +330,10 @@ object IndexCatalog {
 
   /** Write the keymap wholesale from `rows` (any frame carrying the key
     * and the partition columns — the index itself at backfill, the
-    * reassigned frame at a rebuild). Marker written AFTER the parquet
-    * commit (killed-build discipline). */
+    * reassigned frame at a rebuild) through the staged
+    * [[Maintenance.replace]]. Marker written AFTER the parquet commit,
+    * inside the stage (killed-build discipline: a killed write never
+    * installs a keymap, so the next call rebuilds). */
   private[sources] def writeKeymap(spark: SparkSession, basePath: String,
                                    name: String, rows: DataFrame,
                                    keyCol: String): Unit = {
@@ -338,15 +342,16 @@ object IndexCatalog {
       s"index $name is partitioned by its key column '$keyCol' — " +
         "the keymap would duplicate the layout; partition by derived " +
         "columns (label/bucket), never the unique key")
-    rows.select((keyCol +: partitionCols).map(col): _*)
-      .select(col(keyCol) +: partitionCols.map(c => col(c).cast("string").as(c)): _*)
-      .distinct()
-      .withColumn("kbucket", kbucketCol(col(keyCol)))
-      .repartition(col("kbucket"))
-      .write.mode("overwrite").partitionBy("kbucket")
-      .parquet(keymapDir(basePath, name).toString)
-    Files.writeString(keymapMarker(basePath, name),
-      s"""{"key": "$keyCol", "buckets": $KeyBuckets}""")
+    Maintenance.replace(keymapDir(basePath, name)) { stage =>
+      rows.select((keyCol +: partitionCols).map(col): _*)
+        .select(col(keyCol) +: partitionCols.map(c => col(c).cast("string").as(c)): _*)
+        .distinct()
+        .withColumn("kbucket", kbucketCol(col(keyCol)))
+        .repartition(col("kbucket"))
+        .write.mode("overwrite").partitionBy("kbucket").parquet(stage)
+      Files.writeString(Paths.get(stage, KeymapMarkerName),
+        s"""{"key": "$keyCol", "buckets": $KeyBuckets}""")
+    }
   }
 
   /** The kbucket shards a key frame hashes into — ≤ KeyBuckets values,
@@ -415,32 +420,6 @@ object IndexCatalog {
       .drop("kbucket")
   }
 
-  /** Dynamic-overwrite the `keys` keys' kbucket shards with
-    * `rest ∪ locations` where rest = the shards' rows for OTHER keys —
-    * i.e. set the keymap's view of `keys` to exactly `locations`
-    * (strings). ∝ the batch's kbucket footprint, never the keymap size.
-    * `mayEmpty = false` skips the emptied-shard cleanup collect: an
-    * upsert's shards always keep ≥1 row per batch key (its surviving
-    * location lands in the SAME shard — kbucket is a function of the
-    * key), so only vacuum, which removes keys outright, can empty one. */
-  private def rewriteKeymapFor(spark: SparkSession, basePath: String,
-                               name: String, keys: DataFrame, keyCol: String,
-                               locations: DataFrame,
-                               bks: Seq[Long] = null,
-                               mayEmpty: Boolean = true): Unit = {
-    val km = spark.read.parquet(keymapDir(basePath, name).toString)
-    val k = alignKeys(keys, keyCol, km)
-    val buckets = if (bks != null) bks else kbucketsOf(k, keyCol)
-    if (buckets.isEmpty) return
-    val merged = mergedKeymapShards(km, k, keyCol, locations, buckets)
-    if (mayEmpty)
-      dynamicOverwrite(keymapDir(basePath, name), Seq("kbucket"),
-        buckets.map(b => Seq[Any](b)).toArray, merged)
-    else
-      commitStagedKeymap(basePath, name,
-        merged.repartition(col("kbucket")).localCheckpoint(true))
-  }
-
   /** The shard-merge frame both keymap write forms share: the `buckets`
     * shards' rows for OTHER keys ∪ `locations`. */
   private def mergedKeymapShards(km: DataFrame, k: DataFrame, keyCol: String,
@@ -476,15 +455,17 @@ object IndexCatalog {
       .repartition(col("kbucket")).localCheckpoint(true)
   }
 
-  /** The write half: dynamic-overwrite the staged shards. Upsert-scoped
-    * (mayEmpty=false) writes only — an upsert's shards always keep ≥1
-    * row per batch key, so no emptied-shard cleanup is needed. */
+  /** The write half: dynamic-overwrite the staged `bks` shards. Upsert
+    * writes only — an upsert's shards always keep ≥1 row per batch key
+    * (its surviving location lands in the SAME shard — kbucket is a
+    * function of the key), so the touched set is the written set and no
+    * emptied-shard collect runs. */
   private def commitStagedKeymap(basePath: String, name: String,
-                                 staged: DataFrame): Unit =
-    staged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("kbucket")
-      .parquet(keymapDir(basePath, name).toString)
+                                 staged: DataFrame, bks: Seq[Long]): Unit = {
+    val shards = bks.map(b => Seq[Any](b))
+    Maintenance.commitOverwrite(keymapDir(basePath, name), Seq("kbucket"),
+      shards, staged, shards.toSet)
+  }
 
   /** Partition values of `locs` (stored strings) cast back to the
     * index's CURRENT column types — the literal probe values for the
@@ -692,7 +673,7 @@ object IndexCatalog {
           else parts.reduce(_ unionByName _).distinct()
         }
         val km = spark.read.parquet(kmDirPath.toString)
-        kmStaged = materializeForOverwrite(Seq("kbucket"),
+        kmStaged = Maintenance.materializeForOverwrite(Seq("kbucket"),
           mergedKeymapShards(km, alignKeys(tsKeys, keyCol, km), keyCol,
             locations, tsBks))
       }
@@ -704,27 +685,20 @@ object IndexCatalog {
         }.reduce(_ || _)
         val scoped = idx.filter(touchedPred)
         val survivors = scoped.join(probe, hiddenCond(scoped), "left_anti")
-        val (out, written) = materializeForOverwrite(partitionCols, survivors)
+        val (out, written) = Maintenance.materializeForOverwrite(partitionCols, survivors)
         graft.operators.Par.run(Seq(
-          () => commitOverwrite(Paths.get(basePath, name, "data"),
+          () => Maintenance.commitOverwrite(Paths.get(basePath, name, "data"),
             partitionCols, touchedValues, out, written),
           () => stageKeymapCompaction(if (versioned) Some(out) else None)),
           parallelism = 2)
       } else stageKeymapCompaction(None)
-      // mayEmpty semantics preserved: deletes can empty a shard, and the
-      // commitOverwrite path removes the emptied shard directories
-      commitOverwrite(kmDirPath, Seq("kbucket"),
-        tsBks.map(b => Seq[Any](b)).toArray, kmStaged._1, kmStaged._2)
+      // deletes can empty a shard: the collected written set lets
+      // commitOverwrite remove the emptied shard directories
+      Maintenance.commitOverwrite(kmDirPath, Seq("kbucket"),
+        tsBks.map(b => Seq[Any](b)), kmStaged._1, kmStaged._2)
     }
-    deleteTree(tombstoneDir(basePath, name))
+    Maintenance.deleteRecursively(tombstoneDir(basePath, name))
   }
-
-  private def deleteTree(dir: java.nio.file.Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally s.close()
-    }
 
   /** Top-K search against a cataloged index under ITS declared metric —
     * the reference stores the metric in the index descriptor
@@ -958,14 +932,17 @@ object IndexCatalog {
     var outPair: (DataFrame, Set[Seq[Any]]) = null
     if (keysNeedA.nonEmpty)
       graft.operators.Par.run(Seq(
-        () => commitStagedKeymap(basePath, name,
-          stageKeymapRewrite(spark, basePath, name, keyDF(keysNeedA), keyCol,
-            locDF(keysNeedA, k =>
-              oldByKey.getOrElse(k, emptyLocs) ++ newByKey.getOrElse(k, emptyLocs)),
-            bksLocal(keysNeedA))),
-        () => outPair = materializeForOverwrite(partitionCols, merged)),
+        () => {
+          val bksA = bksLocal(keysNeedA)
+          commitStagedKeymap(basePath, name,
+            stageKeymapRewrite(spark, basePath, name, keyDF(keysNeedA), keyCol,
+              locDF(keysNeedA, k =>
+                oldByKey.getOrElse(k, emptyLocs) ++ newByKey.getOrElse(k, emptyLocs)),
+              bksA), bksA)
+        },
+        () => outPair = Maintenance.materializeForOverwrite(partitionCols, merged)),
         parallelism = 2)
-    else outPair = materializeForOverwrite(partitionCols, merged)
+    else outPair = Maintenance.materializeForOverwrite(partitionCols, merged)
     // keymap phase C: compact the scoped keys' entries to their SURVIVING
     // locations (unversioned: the batch's locations, known driver-side;
     // versioned: from the materialized rewrite output — the stored row
@@ -976,8 +953,9 @@ object IndexCatalog {
     // half reads only keymap shards and the materialized output, so it
     // overlaps the data commit (guide §2.6).
     var stagedC: DataFrame = null
+    val bksC = bksLocal(keysNeedC)
     graft.operators.Par.run(Seq(
-      () => commitOverwrite(Paths.get(basePath, name, "data"), partitionCols,
+      () => Maintenance.commitOverwrite(Paths.get(basePath, name, "data"), partitionCols,
         touchedValues, outPair._1, outPair._2),
       () => if (keysNeedC.nonEmpty) {
         val cKeys = keyDF(keysNeedC)
@@ -991,68 +969,10 @@ object IndexCatalog {
             .distinct()
         }
         stagedC = stageKeymapRewrite(spark, basePath, name, cKeys, keyCol,
-          cLocs, bksLocal(keysNeedC))
+          cLocs, bksC)
       }),
       parallelism = 2)
-    if (stagedC != null) commitStagedKeymap(basePath, name, stagedC)
-  }
-
-  /** Dynamic partition overwrite of `target` with emptied-directory
-    * cleanup — shared by the data rewrite and the keymap shard rewrite. */
-  private def dynamicOverwrite(target: java.nio.file.Path,
-                               partitionCols: Seq[String],
-                               touchedValues: Array[Seq[Any]],
-                               merged: DataFrame): DataFrame = {
-    val (out, written) = materializeForOverwrite(partitionCols, merged)
-    commitOverwrite(target, partitionCols, touchedValues, out, written)
-  }
-
-  /** The compute half of [[dynamicOverwrite]]: materialize the rewrite
-    * output (lineage cut off the files about to be replaced) and collect
-    * its written partition values — no file under `target` is touched.
-    * Split out so [[upsertInto]] can overlap this (the merge's real
-    * compute) with the phase-A keymap write, which must land BEFORE the
-    * data write but does not depend on the merge's result. */
-  private def materializeForOverwrite(partitionCols: Seq[String],
-                                      merged: DataFrame): (DataFrame, Set[Seq[Any]]) = {
-    val out = merged
-      .repartition(partitionCols.map(col): _*)
-      .localCheckpoint(true)
-    val written = out.select(partitionCols.map(col): _*).distinct()
-      .collect().map(_.toSeq).toSet
-    (out, written)
-  }
-
-  /** The write half of [[dynamicOverwrite]]. */
-  private def commitOverwrite(target: java.nio.file.Path,
-                              partitionCols: Seq[String],
-                              touchedValues: Array[Seq[Any]],
-                              out: DataFrame,
-                              written: Set[Seq[Any]]): DataFrame = {
-    out.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .parquet(target.toString)
-    // Dynamic overwrite only rewrites partitions PRESENT in `out`. A
-    // touched partition whose every row was superseded (all its keys moved
-    // elsewhere, nothing new landed — or every row deleted) is absent from
-    // `out` and would keep its stale directory — delete those explicitly.
-    // Directory names use Spark's own Hive-escaping (a string label 'a:b'
-    // lives in 'label=a%3Ab'; null in the default-partition dir), so the
-    // cleanup finds exactly the directories the writer created.
-    val emptied = touchedValues.filterNot(written.contains)
-    emptied.foreach { values =>
-      val dir = partitionCols.zip(values)
-        .map { case (c, v) =>
-          if (v == null)
-            s"$c=${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
-          else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .getPartitionPathString(c, String.valueOf(v))
-        }
-        .foldLeft(target)(_ resolve _)
-      deleteTree(dir)
-    }
-    out
+    if (stagedC != null) commitStagedKeymap(basePath, name, stagedC, bksC)
   }
 
   /** Remove pending tombstones for `keys` (the upsert revival path). The
@@ -1162,13 +1082,10 @@ object IndexCatalog {
         .join(broadcast(alignKeys(keys, keyCol, km)), Seq(keyCol), "left_semi")
       castLocations(locs, idx, partitionCols).distinct().collect().map(_.toSeq)
     }
-    def isFileGone(t: Throwable): Boolean =
-      t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
-        isFileGone(t.getCause))
     val locValues =
       try lookup()
       catch {
-        case e: Throwable if isFileGone(e) =>
+        case e: Throwable if ServingCache.isTornRead(e) =>
           ServingCache.invalidate(basePath, name)
           // the re-plan must list FRESH files — a listing cached mid-
           // overwrite otherwise feeds the retry the same deleted file

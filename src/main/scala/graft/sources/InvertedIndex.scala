@@ -621,7 +621,7 @@ object InvertedIndex {
       : (Seq[String], DataFrame) = {
     import spark.implicits._
     val buckets = bucketsOf(terms)
-    ensureImpacts(spark, layout)
+    ensureDerived(spark, layout, ImpactsStore)
     // serving mode: the ubs collect below consumes dict⋈impacts⋈stats —
     // three per-request metadata jobs over files; resident frames remove
     // the listing/footer/scan floor exactly as in [[bm25Over]]
@@ -1896,9 +1896,9 @@ object InvertedIndex {
     * path's masking business and do not violate any of these. */
   private[graft] def auditFrame(spark: SparkSession, layout: Layout,
                                 artifact: String = "inverted"): DataFrame = {
-    ensureLens(spark, layout)
-    ensureFootprint(spark, layout)
-    ensureImpacts(spark, layout)
+    ensureDerived(spark, layout, LensStore)
+    ensureDerived(spark, layout, FootprintStore)
+    ensureDerived(spark, layout, ImpactsStore)
     val post = spark.read.parquet(layout.dataPath)
     def row(inv: String, violations: org.apache.spark.sql.Column,
             from: DataFrame): DataFrame =
@@ -2065,8 +2065,8 @@ object InvertedIndex {
     // backfill BEFORE the posting append: a pre-sidecar index derives its
     // lens (and impact bounds) from the stored postings, which must not
     // yet include this batch
-    ensureLens(spark, layout)
-    ensureImpacts(spark, layout)
+    ensureDerived(spark, layout, LensStore)
+    ensureDerived(spark, layout, ImpactsStore)
     val (postings, lens0) = postingsOfWith(docs, tokenizerOf(tokKindOf(layout)))
     // the two batch pins tokenize independently (lens is a subframe of
     // the postings plan, so each checkpoint runs its own pass) — the
@@ -2108,7 +2108,7 @@ object InvertedIndex {
       val mergedStats = spark.read.parquet(layout.statsPath)
         .select((col("n") + d.getLong(0)).as("n"),
           (col("total_dl") + d.getLong(1)).as("total_dl"))
-      stagedSwap(mergedStats.coalesce(1), layout.statsPath)
+      replaceStats(layout, mergedStats)
     })
     // lens follows the corpus: the batch's (doc_id, dl) rows append into
     // their dbucket shards (∝ batch), so a later DELETE of an upserted
@@ -2150,11 +2150,10 @@ object InvertedIndex {
     * a SIGNED per-term df adjustment (w, ddf): upsert passes increments,
     * vacuum negative decrements. Only the delta terms' tbucket partitions
     * are read (partition-pruned scan), merged (full-outer: new terms
-    * appear, zeroed terms drop), and dynamic-overwritten; a bucket whose
-    * every term died has its directory removed explicitly (the postings'
-    * overwritePartitions discipline, one directory over). The merge frame
-    * is checkpointed before the write — dynamic overwrite must never
-    * consume lineage over the files it is replacing. */
+    * appear, zeroed terms drop), and overwritten through the
+    * touched-partition [[Maintenance.materializeForOverwrite]] /
+    * [[Maintenance.commitOverwrite]] pair — a bucket whose every term
+    * died has its directory removed. */
   private def mergeDictBuckets(spark: SparkSession, layout: Layout,
                                delta: DataFrame): Unit = {
     import spark.implicits._
@@ -2163,16 +2162,17 @@ object InvertedIndex {
     val touched = d.select(col("tbucket")).distinct()
       .as[Long].collect().sorted.toIndexedSeq
     if (touched.isEmpty) return
-    val merged = spark.read.parquet(layout.dictPath)
-      .filter(col("tbucket").isin(touched: _*))
-      .select(col("w"), col("df"))
-      .join(d.select(col("w"), col("ddf")), Seq("w"), "full_outer")
-      .select(col("w"),
-        (coalesce(col("df"), lit(0L)) + coalesce(col("ddf"), lit(0L))).as("df"))
-      .filter(col("df") > 0L)
-      .withColumn("tbucket", bucketCol(col("w")))
-      .repartition(col("tbucket"))
-      .localCheckpoint(eager = true) // cut lineage off the overwritten files
+    // the compute half of the dict's touched-partition overwrite: pinned
+    // here because the key-set sidecars below derive from it too
+    val (merged, written) = Maintenance.materializeForOverwrite(Seq("tbucket"),
+      spark.read.parquet(layout.dictPath)
+        .filter(col("tbucket").isin(touched: _*))
+        .select(col("w"), col("df"))
+        .join(d.select(col("w"), col("ddf")), Seq("w"), "full_outer")
+        .select(col("w"),
+          (coalesce(col("df"), lit(0L)) + coalesce(col("ddf"), lit(0L))).as("df"))
+        .filter(col("df") > 0L)
+        .withColumn("tbucket", bucketCol(col("w"))))
     // the deletion-neighborhood sidecar needs the KEY-SET DELTA (terms
     // entering / leaving the dictionary), derivable only from the
     // PRE-merge slice — computed and pinned (two overlapped read-only
@@ -2210,28 +2210,19 @@ object InvertedIndex {
         d.select(col("w")).distinct().localCheckpoint(eager = true)
       else null
     val folds = Seq.newBuilder[() => Unit]
-    folds += (() => {
-      val written = merged.select(col("tbucket")).distinct()
-        .as[Long].collect().toSet
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("tbucket").parquet(layout.dictPath)
-      touched.filterNot(written.contains).foreach { b =>
-        Maintenance.deleteRecursively(
-          Paths.get(layout.dictPath).resolve(s"tbucket=$b"))
-      }
-    })
+    folds += (() => Maintenance.commitOverwrite(Paths.get(layout.dictPath),
+      Seq("tbucket"), touched.map(Seq(_)), merged, written))
     // the lex sidecar follows the dict's KEY SET (word indexes): only the
     // delta terms can enter or leave the dictionary in this merge, so the
     // lex update reads and overwrites exactly their p2 partitions
     if (lexExists)
-      folds += (() => mergeLexPartitions(spark, layout, deltaTermsCkpt,
-        merged.select(col("w"))))
+      folds += (() => mergeKeySetPartitions(spark, LexStore.path(layout), "p2",
+        lexP2Col, lexRowsOf, deltaTermsCkpt, merged.select(col("w"))))
     // the reversed-term sidecar follows the same key set on the reversed
     // prefix key (one r2 partition per term — the lex discipline)
     if (revExists)
-      folds += (() => mergeRevPartitions(spark, layout, deltaTermsCkpt,
-        merged.select(col("w"))))
+      folds += (() => mergeKeySetPartitions(spark, RevStore.path(layout), "r2",
+        revP2Col, revRowsOf, deltaTermsCkpt, merged.select(col("w"))))
     // the deletion-neighborhood sidecar follows the same key set, with
     // its own cost discipline (append-dominant — see mergeDelPartitions)
     if (dictDelExists)
@@ -2239,75 +2230,32 @@ object InvertedIndex {
     graft.operators.Par.run(folds.result(), parallelism = 4)
   }
 
-  /** TOUCHED-PARTITION lex merge — [[mergeDictBuckets]]' discipline on
-    * the prefix key: the delta terms' p2 partitions are read, the dead
-    * delta terms (no longer in the merged dict slice) drop, the alive
-    * ones enter (idempotent — re-adding an existing key is a no-op by
-    * the distinct), and only those partitions dynamic-overwrite. I/O ∝
-    * the batch's prefix footprint, never the vocabulary. `deltaTerms`
-    * must be pre-checkpointed by the caller (it is consumed three times,
-    * and the lex and rev merges share one pinned frame). */
-  private def mergeLexPartitions(spark: SparkSession, layout: Layout,
-                                 deltaTerms: DataFrame,
-                                 liveTouched: DataFrame): Unit = {
+  /** TOUCHED-PARTITION key-set merge for the lex (p2) and reversed-term
+    * (r2) sidecars — [[mergeDictBuckets]]' discipline on a prefix key:
+    * the delta terms' partitions (`keyOf`) are read, the dead delta terms
+    * (no longer in the merged dict slice) drop, the alive ones enter
+    * (idempotent — re-adding an existing key is a no-op by the
+    * distinct), and only those partitions are overwritten. I/O ∝ the
+    * batch's prefix footprint, never the vocabulary. `deltaTerms` must
+    * be pre-checkpointed by the caller (it is consumed three times, and
+    * the lex and rev merges share one pinned frame). */
+  private def mergeKeySetPartitions(spark: SparkSession, path: String,
+                                    partitionCol: String,
+                                    keyOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+                                    rowsOf: DataFrame => DataFrame,
+                                    deltaTerms: DataFrame,
+                                    liveTouched: DataFrame): Unit = {
     import spark.implicits._
-    val lexPath = dictLexPathOf(layout)
-    val delta = deltaTerms
-    val touchedP2 = delta.select(lexP2Col(col("w")).as("p2")).distinct()
+    val touched = deltaTerms.select(keyOf(col("w")).as("k")).distinct()
       .as[String].collect().sorted.toIndexedSeq
-    if (touchedP2.isEmpty) return
-    val aliveDelta = delta.join(liveTouched, Seq("w"), "left_semi")
-    val deadDelta = delta.join(liveTouched, Seq("w"), "left_anti")
-    val existing = spark.read.parquet(lexPath)
-      .filter(col("p2").isin(touchedP2: _*)).select(col("w"))
-    val out = lexRowsOf(
-      existing.unionByName(aliveDelta).distinct()
-        .join(deadDelta, Seq("w"), "left_anti"))
-      .repartition(col("p2"))
-      .localCheckpoint(eager = true) // cut lineage off the overwritten files
-    val written = out.select(col("p2")).distinct().as[String].collect().toSet
-    out.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("p2").parquet(lexPath)
-    touchedP2.filterNot(written.contains).foreach { p =>
-      val escaped = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.escapePathName(p)
-      Maintenance.deleteRecursively(Paths.get(lexPath).resolve(s"p2=$escaped"))
-    }
-  }
-
-  /** TOUCHED-PARTITION reversed-term merge — [[mergeLexPartitions]]'
-    * discipline verbatim on the reversed-prefix key: the delta terms'
-    * r2 partitions read, dead delta terms drop, alive ones enter, only
-    * those partitions dynamic-overwrite. I/O ∝ the batch's reversed-
-    * prefix footprint, never the vocabulary. */
-  private def mergeRevPartitions(spark: SparkSession, layout: Layout,
-                                 deltaTerms: DataFrame,
-                                 liveTouched: DataFrame): Unit = {
-    import spark.implicits._
-    val revPath = dictRevPathOf(layout)
-    val delta = deltaTerms
-    val touchedR2 = delta.select(revP2Col(col("w")).as("r2")).distinct()
-      .as[String].collect().sorted.toIndexedSeq
-    if (touchedR2.isEmpty) return
-    val aliveDelta = delta.join(liveTouched, Seq("w"), "left_semi")
-    val deadDelta = delta.join(liveTouched, Seq("w"), "left_anti")
-    val existing = spark.read.parquet(revPath)
-      .filter(col("r2").isin(touchedR2: _*)).select(col("w"))
-    val out = revRowsOf(
-      existing.unionByName(aliveDelta).distinct()
-        .join(deadDelta, Seq("w"), "left_anti"))
-      .repartition(col("r2"))
-      .localCheckpoint(eager = true) // cut lineage off the overwritten files
-    val written = out.select(col("r2")).distinct().as[String].collect().toSet
-    out.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("r2").parquet(revPath)
-    touchedR2.filterNot(written.contains).foreach { p =>
-      val escaped = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.escapePathName(p)
-      Maintenance.deleteRecursively(Paths.get(revPath).resolve(s"r2=$escaped"))
-    }
+    if (touched.isEmpty) return
+    val aliveDelta = deltaTerms.join(liveTouched, Seq("w"), "left_semi")
+    val deadDelta = deltaTerms.join(liveTouched, Seq("w"), "left_anti")
+    val existing = spark.read.parquet(path)
+      .filter(col(partitionCol).isin(touched: _*)).select(col("w"))
+    Maintenance.overwritePartitions(path, partitionCol, touched,
+      rowsOf(existing.unionByName(aliveDelta).distinct()
+        .join(deadDelta, Seq("w"), "left_anti")))
   }
 
   /** Deletion-neighborhood maintenance — APPEND-DOMINANT, because the
@@ -2347,88 +2295,97 @@ object InvertedIndex {
         .localCheckpoint(eager = true)
       val touchedVb = deadRows.select(col("vbucket")).distinct()
         .as[Long].collect().sorted.toIndexedSeq
-      val out = spark.read.parquet(delPath)
-        .filter(col("vbucket").isin(touchedVb: _*))
-        .select(col("v"), col("w"))
-        .join(leavingTerms, Seq("w"), "left_anti")
-        .withColumn("vbucket", bucketCol(col("v")))
-        .repartition(col("vbucket"))
-        .localCheckpoint(eager = true) // cut lineage off the overwritten files
-      val written = out.select(col("vbucket")).distinct()
-        .as[Long].collect().toSet
-      out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("vbucket").parquet(delPath)
-      touchedVb.filterNot(written.contains).foreach { b =>
-        Maintenance.deleteRecursively(Paths.get(delPath).resolve(s"vbucket=$b"))
-      }
+      Maintenance.overwritePartitions(delPath, "vbucket", touchedVb,
+        spark.read.parquet(delPath)
+          .filter(col("vbucket").isin(touchedVb: _*))
+          .select(col("v"), col("w"))
+          .join(leavingTerms, Seq("w"), "left_anti")
+          .withColumn("vbucket", bucketCol(col("v"))))
     }
   }
 
-  /** Backfill the deletion-neighborhood sidecar for a WORD index built
-    * before it existed — one pass over the vocabulary-sized dict keys,
-    * staged move (a killed backfill is invisible, re-derived next
-    * call). */
-  private def ensureDictDel(spark: SparkSession, layout: Layout): Unit = {
-    val delPath = dictDelPathOf(layout)
-    if (!Files.exists(Paths.get(delPath))) {
-      val staged = delPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(staged))
-      delRowsOf(spark.read.parquet(layout.dictPath).select(col("w")))
-        .withColumn("vbucket", bucketCol(col("v")))
-        .repartition(col("vbucket"))
-        .write.mode("overwrite").partitionBy("vbucket").parquet(staged)
-      Files.move(Paths.get(staged), Paths.get(delPath))
-    }
-  }
+  /** A DERIVED sidecar: where it lives, its one partition column, and its
+    * derivation — a pure function of the stored postings or, when
+    * `ofDictKeys`, of the dict's key set. The derivation is written once
+    * and serves both lifecycle moves: [[ensureDerived]] backfills an
+    * index built before the sidecar existed (or whose backfill was
+    * killed) through [[Maintenance.publishIfAbsent]], and [[rederive]]
+    * repairs a drifted store through [[Maintenance.replace]]. */
+  private final case class Derived(path: Layout => String, partitionCol: String,
+                                   ofDictKeys: Boolean,
+                                   rows: DataFrame => DataFrame)
 
-  /** Backfill the lex sidecar for a WORD index built before it existed —
-    * one pass over the vocabulary-sized dict keys, staged move (a killed
-    * backfill is invisible, re-derived next call). */
-  private def ensureDictLex(spark: SparkSession, layout: Layout): Unit = {
-    val lexPath = dictLexPathOf(layout)
-    if (!Files.exists(Paths.get(lexPath))) {
-      val staged = lexPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(staged))
-      lexRowsOf(spark.read.parquet(layout.dictPath).select(col("w")))
-        .repartition(col("p2"))
-        .write.mode("overwrite").partitionBy("p2").parquet(staged)
-      Files.move(Paths.get(staged), Paths.get(lexPath))
-    }
-  }
+  /** (w, tf_max, dl_min, tbucket): each term's exact impact bounds over a
+    * posting frame — the backfill, vacuum's touched-bucket refresh and
+    * [[refreshImpacts]] share it. */
+  private def impactsOf(post: DataFrame): DataFrame =
+    post.groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
+        min(col("dl")).as("dl_min"))
+      .withColumn("tbucket", bucketCol(col("w")))
 
-  /** Backfill the reversed-term sidecar — the ensureDictLex discipline
-    * on the reversed key. */
-  private def ensureDictRev(spark: SparkSession, layout: Layout): Unit = {
-    val revPath = dictRevPathOf(layout)
-    if (!Files.exists(Paths.get(revPath))) {
-      val staged = revPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(staged))
-      revRowsOf(spark.read.parquet(layout.dictPath).select(col("w")))
-        .repartition(col("r2"))
-        .write.mode("overwrite").partitionBy("r2").parquet(staged)
-      Files.move(Paths.get(staged), Paths.get(revPath))
-    }
-  }
+  /** The dictionary: per-term df from posting counts (the build's
+    * definition). */
+  private val DictStore = Derived(_.dictPath, "tbucket", ofDictKeys = false,
+    _.groupBy(col("w")).agg(count(lit(1)).as("df"))
+      .withColumn("tbucket", bucketCol(col("w"))))
 
-  /** Backfill the impact-bound sidecar for an index that predates it: one
-    * column-pruned pass over the stored postings computes each term's
-    * exact (tf_max, dl_min). Written through a staged move so a killed
-    * backfill is invisible (re-derived next call). */
-  private def ensureImpacts(spark: SparkSession, layout: Layout): Unit = {
-    val impPath = impactsPathOf(layout)
-    if (!Files.exists(Paths.get(impPath))) {
-      val staged = impPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(staged))
-      spark.read.parquet(layout.dataPath)
-        .groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
-          min(col("dl")).as("dl_min"))
-        .withColumn("tbucket", bucketCol(col("w")))
-        .repartition(col("tbucket"))
-        .write.mode("overwrite").partitionBy("tbucket").parquet(staged)
-      Files.move(Paths.get(staged), Paths.get(impPath))
-    }
-  }
+  /** Prefix-ordered lex sidecar. */
+  private val LexStore = Derived(dictLexPathOf, "p2", ofDictKeys = true, lexRowsOf)
+
+  /** Reversed-term sidecar: the lex derivation on the reversed key. */
+  private val RevStore = Derived(dictRevPathOf, "r2", ofDictKeys = true, revRowsOf)
+
+  /** Deletion-neighborhood sidecar: one pass over the vocabulary-sized
+    * dict keys. */
+  private val DelStore = Derived(dictDelPathOf, "vbucket", ofDictKeys = true,
+    delRowsOf(_).withColumn("vbucket", bucketCol(col("v"))))
+
+  /** Impact-bound sidecar: one column-pruned pass over the stored
+    * postings computes each term's exact (tf_max, dl_min). */
+  private val ImpactsStore = Derived(impactsPathOf, "tbucket", ofDictKeys = false,
+    impactsOf)
+
+  /** Doc-length sidecar: dl rides denormalized on every posting, so one
+    * column-pruned scan + distinct recovers the exact per-doc lengths
+    * (every doc has ≥1 posting because even empty text tokenizes to a
+    * single empty-string term). */
+  private val LensStore = Derived(lensPathOf, "dbucket", ofDictKeys = false,
+    _.select(col("doc_id"), col("dl")).distinct()
+      .withColumn("dbucket", dbucketCol(col("doc_id"))))
+
+  /** Footprint sidecar: one column-pruned scan over (doc_id, tbucket)
+    * recovers the exact map — the full-store discovery cost, paid ONCE
+    * instead of on every vacuum (tbucket cast long: the partition-
+    * inferred int must match the upsert append path's long hash). */
+  private val FootprintStore = Derived(footprintPathOf, "dbucket", ofDictKeys = false,
+    _.select(col("doc_id"), col("tbucket").cast("long").as("tbucket")).distinct()
+      .withColumn("dbucket", dbucketCol(col("doc_id"))))
+
+  /** Squared-norm sidecar (embed indexes): a pure per-doc function of the
+    * postings. */
+  private val NormsStore = Derived(normsPathOf, "dbucket", ofDictKeys = false,
+    normsOf(_).withColumn("dbucket", dbucketCol(col("doc_id"))))
+
+  /** The frame `d` derives from, as stored now. */
+  private def sourceOf(spark: SparkSession, layout: Layout, d: Derived): DataFrame =
+    if (d.ofDictKeys) spark.read.parquet(layout.dictPath).select(col("w"))
+    else spark.read.parquet(layout.dataPath)
+
+  private def writeDerived(d: Derived, source: DataFrame, dest: String): Unit =
+    d.rows(source).repartition(col(d.partitionCol))
+      .write.mode("overwrite").partitionBy(d.partitionCol).parquet(dest)
+
+  /** BACKFILL: publish `d`'s derivation if the store is absent — a killed
+    * backfill is invisible (its stage never installs) and concurrent
+    * first readers each publish through a stage of their own. */
+  private def ensureDerived(spark: SparkSession, layout: Layout, d: Derived): Unit =
+    Maintenance.publishIfAbsent(Paths.get(d.path(layout)))(
+      writeDerived(d, sourceOf(spark, layout, d), _))
+
+  /** REPAIR: replace `d` with its derivation of `source` (staged, renamed
+    * in). */
+  private def rederive(layout: Layout, d: Derived, source: DataFrame): Unit =
+    Maintenance.replace(Paths.get(d.path(layout)))(writeDerived(d, source, _))
 
   /** TOUCHED-BUCKET impact merge — [[mergeDictBuckets]]' discipline with
     * max/min combine: only the batch terms' tbucket partitions read,
@@ -2457,29 +2414,11 @@ object InvertedIndex {
       .withColumn("tbucket", bucketCol(col("w")))
       .repartition(col("tbucket"))
       .localCheckpoint(eager = true) // cut lineage off the overwritten files
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("tbucket").parquet(impactsPathOf(layout))
-  }
-
-  /** Backfill the doc-length sidecar for an index built before it existed:
-    * dl rides denormalized on every posting, so one column-pruned scan +
-    * distinct recovers the exact per-doc lengths (one-time, deterministic
-    * — every doc has ≥1 posting because even empty text tokenizes to a
-    * single empty-string term). Written through a staged move so a killed
-    * backfill is invisible (re-derived next call). */
-  private def ensureLens(spark: SparkSession, layout: Layout): Unit = {
-    val lensPath = lensPathOf(layout)
-    if (!Files.exists(Paths.get(lensPath))) {
-      val staged = lensPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(staged))
-      spark.read.parquet(layout.dataPath)
-        .select(col("doc_id"), col("dl")).distinct()
-        .withColumn("dbucket", dbucketCol(col("doc_id")))
-        .repartition(col("dbucket"))
-        .write.mode("overwrite").partitionBy("dbucket").parquet(staged)
-      Files.move(Paths.get(staged), Paths.get(lensPath))
-    }
+    // a max/min merge never empties a bucket: the touched set IS the
+    // written set, so no written-partition collect runs
+    val buckets = touched.map(Seq[Any](_))
+    Maintenance.commitOverwrite(Paths.get(impactsPathOf(layout)), Seq("tbucket"),
+      buckets, merged, buckets.toSet)
   }
 
   /** The lens rows for a batch of doc ids, pruned to the ids' dbucket
@@ -2492,25 +2431,6 @@ object InvertedIndex {
     spark.read.parquet(lensPathOf(layout))
       .filter(col("dbucket").isin(dbuckets: _*))
       .select(col("doc_id"), col("dl"))
-
-  /** Backfill the footprint sidecar for an index built before it
-    * existed: one column-pruned scan over (doc_id, tbucket) recovers the
-    * exact map — the full-store discovery cost, paid ONCE instead of on
-    * every vacuum. Written through a staged move so a killed backfill is
-    * invisible (re-derived next call). */
-  private def ensureFootprint(spark: SparkSession, layout: Layout): Unit = {
-    val footPath = footprintPathOf(layout)
-    if (!Files.exists(Paths.get(footPath))) {
-      val staged = footPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(staged))
-      spark.read.parquet(layout.dataPath)
-        .select(col("doc_id"), col("tbucket").cast("long").as("tbucket")).distinct()
-        .withColumn("dbucket", dbucketCol(col("doc_id")))
-        .repartition(col("dbucket"))
-        .write.mode("overwrite").partitionBy("dbucket").parquet(staged)
-      Files.move(Paths.get(staged), Paths.get(footPath))
-    }
-  }
 
   /** Incremental DOCUMENT DELETE — the lexical twin of
     * [[IndexCatalog.tombstone]], completing the maintenance symmetry
@@ -2537,7 +2457,7 @@ object InvertedIndex {
   def deleteDocs(spark: SparkSession, layout: Layout, ids: DataFrame): Unit =
       WriterLease.withLease(leaseRoot(layout)) {
     ServingCache.dropStaleListings(spark) // fresh listings (see upsertDocs)
-    ensureLens(spark, layout)
+    ensureDerived(spark, layout, LensStore)
     val tombDir = tombDirOf(layout)
     val existing =
       if (hasParquet(tombDir)) spark.read.parquet(tombDir.toString)
@@ -2562,7 +2482,7 @@ object InvertedIndex {
           val mergedStats = spark.read.parquet(layout.statsPath)
             .select((col("n") - d.getLong(0)).as("n"),
               (col("total_dl") - d.getLong(1)).as("total_dl"))
-          stagedSwap(mergedStats.coalesce(1), layout.statsPath)
+          replaceStats(layout, mergedStats)
         },
         () => fresh.select(col("doc_id")).coalesce(1)
           .write.mode("append").parquet(tombDir.toString)),
@@ -2593,7 +2513,7 @@ object InvertedIndex {
     val tombDir = tombDirOf(layout)
     if (!hasParquet(tombDir)) return // add-only merges keep bounds exact
     if (!Files.exists(Paths.get(impactsPathOf(layout)))) return
-    ensureFootprint(spark, layout)
+    ensureDerived(spark, layout, FootprintStore)
     val tomb = spark.read.parquet(tombDir.toString).select(col("doc_id"))
       .localCheckpoint(eager = true)
     val dbuckets = tomb.select(dbucketCol(col("doc_id")).as("b")).distinct()
@@ -2604,23 +2524,10 @@ object InvertedIndex {
       .select(col("tbucket")).distinct()
       .as[Long].collect().sorted.toIndexedSeq
     if (touched.isEmpty) return
-    val freshImp = spark.read.parquet(layout.dataPath)
-      .filter(col("tbucket").isin(touched: _*))
-      .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-      .groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
-        min(col("dl")).as("dl_min"))
-      .withColumn("tbucket", bucketCol(col("w")))
-      .repartition(col("tbucket"))
-      .localCheckpoint(eager = true)
-    val written = freshImp.select(col("tbucket")).distinct()
-      .as[Long].collect().toSet
-    freshImp.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("tbucket").parquet(impactsPathOf(layout))
-    touched.filterNot(written.contains).foreach { b =>
-      Maintenance.deleteRecursively(
-        Paths.get(impactsPathOf(layout)).resolve(s"tbucket=$b"))
-    }
+    Maintenance.overwritePartitions(impactsPathOf(layout), "tbucket", touched,
+      impactsOf(spark.read.parquet(layout.dataPath)
+        .filter(col("tbucket").isin(touched: _*))
+        .join(broadcast(tomb), Seq("doc_id"), "left_anti")))
   }
 
   /** Fold pending tombstones into the physical layout — the lexical
@@ -2630,7 +2537,7 @@ object InvertedIndex {
     *  - postings: ONE column-pruned discovery scan finds the dead rows;
     *    only their tbucket partitions rewrite (dynamic partition
     *    overwrite, directories the rewrite emptied removed explicitly —
-    *    the [[IndexCatalog]] overwritePartitions discipline)
+    *    the [[Maintenance.overwritePartitions]] protocol)
     *  - dict: term-level df decrements from the dead postings' counts
     *    through the touched-bucket merge ([[mergeDictBuckets]] — only the
     *    dead terms' dict buckets rewrite); terms whose every doc died
@@ -2653,7 +2560,7 @@ object InvertedIndex {
     import spark.implicits._
     val tombDir = tombDirOf(layout)
     if (!hasParquet(tombDir)) return
-    ensureFootprint(spark, layout)
+    ensureDerived(spark, layout, FootprintStore)
     val tomb = spark.read.parquet(tombDir.toString).select(col("doc_id"))
       .localCheckpoint(eager = true)
     // the batch's dbucket shards — ≤ DocBuckets values, plan-time metadata
@@ -2675,52 +2582,30 @@ object InvertedIndex {
       .localCheckpoint(eager = true)
     // The store folds below touch DISJOINT paths and all derive from the
     // checkpointed tomb/dead frames — overlapped jobs (Par, guide §2.6)
-    // under the one held lease, like upsertDocs' append fan-out. The one
+    // under the one held lease, like upsertDocs' append fan-out. Each is
+    // a touched-partition overwrite of the store's surviving rows. The one
     // real ordering edge stays inside its task: the impacts refresh reads
     // the POST-overwrite postings, so it runs strictly after the
-    // survivors' dynamic overwrite within the same task. The tombstone
-    // dir is deleted only after every fold has finished.
+    // survivors' overwrite within the same task. The tombstone dir is
+    // deleted only after every fold has finished.
+    def foldOut(store: DataFrame, path: String, partitionCol: String,
+                parts: Seq[Long]): Unit =
+      Maintenance.overwritePartitions(path, partitionCol, parts,
+        store.filter(col(partitionCol).isin(parts: _*))
+          .join(broadcast(tomb), Seq("doc_id"), "left_anti"))
     val folds = Seq.newBuilder[() => Unit]
     if (touched.nonEmpty) {
       folds += (() => {
-        val survivors = post.filter(col("tbucket").isin(touched: _*))
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .repartition(col("tbucket"))
-          .localCheckpoint(eager = true) // cut lineage off the files being overwritten
-        val written = survivors.select(col("tbucket")).distinct().as[Long].collect().toSet
-        survivors.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("tbucket").parquet(layout.dataPath)
-        // dynamic overwrite skips partitions absent from the output — a
-        // bucket whose every posting died keeps its stale directory unless
-        // removed explicitly
-        touched.filterNot(written.contains).foreach { b =>
-          Maintenance.deleteRecursively(
-            Paths.get(layout.dataPath).resolve(s"tbucket=$b"))
-        }
+        foldOut(post, layout.dataPath, "tbucket", touched)
         // impact bounds: deletes left them valid-but-stale; refresh the
         // touched buckets EXACTLY from the surviving postings (the
         // per-segment-static impact discipline — recompute at compaction).
         // A pre-sidecar index skips this: its eventual backfill reads the
         // already-vacuumed postings, which is the same exact state.
-        if (Files.exists(Paths.get(impactsPathOf(layout)))) {
-          val freshImp = spark.read.parquet(layout.dataPath)
-            .filter(col("tbucket").isin(touched: _*))
-            .groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
-              min(col("dl")).as("dl_min"))
-            .withColumn("tbucket", bucketCol(col("w")))
-            .repartition(col("tbucket"))
-            .localCheckpoint(eager = true)
-          val writtenI = freshImp.select(col("tbucket")).distinct()
-            .as[Long].collect().toSet
-          freshImp.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("tbucket").parquet(impactsPathOf(layout))
-          touched.filterNot(writtenI.contains).foreach { b =>
-            Maintenance.deleteRecursively(
-              Paths.get(impactsPathOf(layout)).resolve(s"tbucket=$b"))
-          }
-        }
+        if (Files.exists(Paths.get(impactsPathOf(layout))))
+          Maintenance.overwritePartitions(impactsPathOf(layout), "tbucket", touched,
+            impactsOf(spark.read.parquet(layout.dataPath)
+              .filter(col("tbucket").isin(touched: _*))))
       })
       // signed decrement through the touched-bucket merge: only the dead
       // terms' dict buckets rewrite; terms whose every doc died drop
@@ -2730,97 +2615,32 @@ object InvertedIndex {
       // positional sidecar: the dead docs' occurrence rows live in the
       // SAME term buckets as their postings (one tokenizer, one hash), so
       // the footprint-derived touched set covers this fold too
-      if (Files.exists(Paths.get(positionsPathOf(layout))))
-        folds += (() => {
-          val survPos = spark.read.parquet(positionsPathOf(layout))
-            .filter(col("tbucket").isin(touched: _*))
-            .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-            .repartition(col("tbucket"))
-            .localCheckpoint(eager = true)
-          val writtenP = survPos.select(col("tbucket")).distinct()
-            .as[Long].collect().toSet
-          survPos.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("tbucket").parquet(positionsPathOf(layout))
-          touched.filterNot(writtenP.contains).foreach { b =>
-            Maintenance.deleteRecursively(
-              Paths.get(positionsPathOf(layout)).resolve(s"tbucket=$b"))
-          }
-        })
+      val posPath = positionsPathOf(layout)
+      if (Files.exists(Paths.get(posPath)))
+        folds += (() =>
+          foldOut(spark.read.parquet(posPath), posPath, "tbucket", touched))
     }
     if (dbuckets.nonEmpty) {
-      // lens fold: the dead docs' rows drop from their dbucket shards —
-      // the same touched-dbucket dynamic overwrite as the footprint fold
-      // (the flat-store full rewrite this replaced was the last
-      // corpus-proportional step in the delete lifecycle)
-      folds += (() => {
-        val survLens = spark.read.parquet(lensPathOf(layout))
-          .filter(col("dbucket").isin(dbuckets: _*))
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .repartition(col("dbucket"))
-          .localCheckpoint(eager = true)
-        val writtenL = survLens.select(col("dbucket")).distinct()
-          .as[Long].collect().toSet
-        survLens.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("dbucket").parquet(lensPathOf(layout))
-        dbuckets.filterNot(writtenL.contains).foreach { b =>
-          Maintenance.deleteRecursively(
-            Paths.get(lensPathOf(layout)).resolve(s"dbucket=$b"))
+      // lens, norms (embed indexes) and footprint: the dead docs' rows
+      // drop from their dbucket shards (the flat-store full rewrite the
+      // lens fold replaced was the last corpus-proportional step in the
+      // delete lifecycle)
+      Seq(lensPathOf(layout), normsPathOf(layout), footPath)
+        .filter(p => Files.exists(Paths.get(p)))
+        .foreach { p =>
+          folds += (() => foldOut(spark.read.parquet(p), p, "dbucket", dbuckets))
         }
-      })
-      // norms fold (embed indexes): the dead docs' n2 rows drop from
-      // their dbucket shards — the lens fold one sidecar over
-      if (Files.exists(Paths.get(normsPathOf(layout))))
-        folds += (() => {
-          val survNorms = spark.read.parquet(normsPathOf(layout))
-            .filter(col("dbucket").isin(dbuckets: _*))
-            .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-            .repartition(col("dbucket"))
-            .localCheckpoint(eager = true)
-          val writtenN = survNorms.select(col("dbucket")).distinct()
-            .as[Long].collect().toSet
-          survNorms.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("dbucket").parquet(normsPathOf(layout))
-          dbuckets.filterNot(writtenN.contains).foreach { b =>
-            Maintenance.deleteRecursively(
-              Paths.get(normsPathOf(layout)).resolve(s"dbucket=$b"))
-          }
-        })
-      // footprint fold: the dead docs' rows drop from their dbucket
-      // shards (dynamic overwrite of the batch's dbuckets; shards the
-      // fold emptied removed explicitly — same discipline as postings)
-      folds += (() => {
-        val survFoot = spark.read.parquet(footPath)
-          .filter(col("dbucket").isin(dbuckets: _*))
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .repartition(col("dbucket"))
-          .localCheckpoint(eager = true)
-        val writtenD = survFoot.select(col("dbucket")).distinct()
-          .as[Long].collect().toSet
-        survFoot.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("dbucket").parquet(footPath)
-        dbuckets.filterNot(writtenD.contains).foreach { b =>
-          Maintenance.deleteRecursively(
-            Paths.get(footPath).resolve(s"dbucket=$b"))
-        }
-      })
     }
     graft.operators.Par.run(folds.result(), parallelism = 6)
     Maintenance.deleteRecursively(tombDir)
   }
 
-  /** Write `df` beside `destPath`, then swap directories — the reader
-    * never sees a half-written table and the writer never reads the path
-    * it is overwriting. */
-  private def stagedSwap(df: DataFrame, destPath: String): Unit = {
-    val tmp = destPath + ".staged"
-    df.write.mode("overwrite").parquet(tmp)
-    Maintenance.deleteRecursively(Paths.get(destPath))
-    Files.move(Paths.get(tmp), Paths.get(destPath))
-  }
+  /** Replace the one-row (n, total_dl) stats store with `stats` — the
+    * staged [[Maintenance.replace]]: the reader never sees a half-written
+    * table and the writer never reads the path it is overwriting. */
+  private def replaceStats(layout: Layout, stats: DataFrame): Unit =
+    Maintenance.replace(Paths.get(layout.statsPath))(
+      stats.coalesce(1).write.mode("overwrite").parquet(_))
 
   /** REPAIR: re-derive every DERIVED store from the postings (the
     * primary) — the recovery op [[auditFrame]]'s findings point at. Dict,
@@ -2829,79 +2649,47 @@ object InvertedIndex {
     * no matter which sidecar drifted (a production fleet would repair
     * only the flagged artifacts with the same derivations; the blanket
     * form is the simplest correct recovery and is idempotent on healthy
-    * stores). POSITIONS are a primary store themselves (occurrence order
-    * is not derivable from tf) — a damaged positional sidecar needs the
-    * corpus, i.e. a rebuild, not a repair. Pending delete tombstones
-    * must be vacuumed first: stats are decremented at delete time while
-    * postings still hold the dead rows, so a repair under pending
-    * deletes would resurrect pre-delete statistics. */
+    * stores). Each store is written by the same [[Derived]] derivation
+    * its backfill ([[ensureDerived]]) publishes, through the staged
+    * [[Maintenance.replace]]. POSITIONS are a primary store themselves
+    * (occurrence order is not derivable from tf) — a damaged positional
+    * sidecar needs the corpus, i.e. a rebuild, not a repair. Pending
+    * delete tombstones must be vacuumed first: stats are decremented at
+    * delete time while postings still hold the dead rows, so a repair
+    * under pending deletes would resurrect pre-delete statistics. */
   private[graft] def rebuildDerived(spark: SparkSession, layout: Layout): Unit =
       WriterLease.withLease(leaseRoot(layout)) {
     require(!hasParquet(tombDirOf(layout)),
       "pending delete tombstones: vacuum before repair — rebuilding " +
         "stats from postings would resurrect the deleted docs' counts")
-    val post = spark.read.parquet(layout.dataPath)
     // Every derived store is a pure function of the postings (or of the
     // rebuilt dict's key set), so the re-derivations run as OVERLAPPED
-    // jobs (Par, guide §2.6) in four chains whose internal order is the
-    // real dependency structure: dict → its key-set sidecars (lex, del,
-    // rev), lens → stats, footprint, impacts, norms. Each step stages
-    // inside its own ensure*/stagedSwap, unchanged.
+    // jobs (Par, guide §2.6) in chains whose internal order is the real
+    // dependency structure: dict → its key-set sidecars (lex, del, rev),
+    // lens → stats, footprint, impacts, norms. Each store is written by
+    // its one derivation ([[Derived]]) through the staged
+    // [[Maintenance.replace]] — the same derivation its backfill
+    // publishes.
+    val post = spark.read.parquet(layout.dataPath)
     val chains = Seq.newBuilder[() => Unit]
     chains += (() => {
-      // dict: full overwrite from posting counts (the build's definition)
-      val dictStaged = layout.dictPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(dictStaged))
-      post.groupBy(col("w")).agg(count(lit(1)).as("df"))
-        .withColumn("tbucket", bucketCol(col("w")))
-        .repartition(col("tbucket"))
-        .write.mode("overwrite").partitionBy("tbucket").parquet(dictStaged)
-      Maintenance.deleteRecursively(Paths.get(layout.dictPath))
-      Files.move(Paths.get(dictStaged), Paths.get(layout.dictPath))
-      // lex + deletion-neighborhood (word indexes): pure functions of the
-      // rebuilt dict's key set — drop + the backfill derivations (each
-      // staged inside its ensure*)
+      rederive(layout, DictStore, post)
       if (tokKindOf(layout) == "word") {
-        Maintenance.deleteRecursively(Paths.get(dictLexPathOf(layout)))
-        ensureDictLex(spark, layout)
-        Maintenance.deleteRecursively(Paths.get(dictDelPathOf(layout)))
-        ensureDictDel(spark, layout)
-        Maintenance.deleteRecursively(Paths.get(dictRevPathOf(layout)))
-        ensureDictRev(spark, layout)
+        val keys = sourceOf(spark, layout, LexStore) // the REBUILT dict's keys
+        Seq(LexStore, DelStore, RevStore).foreach(rederive(layout, _, keys))
       }
     })
     chains += (() => {
       // lens, then stats from the REBUILT lens (exact integers, the
       // build's rule) — the one derived-of-derived chain
-      Maintenance.deleteRecursively(Paths.get(lensPathOf(layout)))
-      ensureLens(spark, layout)
-      stagedSwap(
-        spark.read.parquet(lensPathOf(layout))
-          .agg(count(lit(1)).as("n"), sum(col("dl")).as("total_dl"))
-          .coalesce(1),
-        layout.statsPath)
+      rederive(layout, LensStore, post)
+      replaceStats(layout, spark.read.parquet(lensPathOf(layout))
+        .agg(count(lit(1)).as("n"), sum(col("dl")).as("total_dl")))
     })
-    chains += (() => {
-      Maintenance.deleteRecursively(Paths.get(footprintPathOf(layout)))
-      ensureFootprint(spark, layout)
-    })
-    chains += (() => {
-      Maintenance.deleteRecursively(Paths.get(impactsPathOf(layout)))
-      ensureImpacts(spark, layout)
-    })
-    // norms (embed indexes): a pure per-doc function of the postings —
-    // re-derive through the same staged move as the other sidecars
+    chains += (() => rederive(layout, FootprintStore, post))
+    chains += (() => rederive(layout, ImpactsStore, post))
     if (Files.exists(Paths.get(normsPathOf(layout))))
-      chains += (() => {
-        val normsStaged = normsPathOf(layout) + ".staged"
-        Maintenance.deleteRecursively(Paths.get(normsStaged))
-        normsOf(post)
-          .withColumn("dbucket", dbucketCol(col("doc_id")))
-          .repartition(col("dbucket"))
-          .write.mode("overwrite").partitionBy("dbucket").parquet(normsStaged)
-        Maintenance.deleteRecursively(Paths.get(normsPathOf(layout)))
-        Files.move(Paths.get(normsStaged), Paths.get(normsPathOf(layout)))
-      })
+      chains += (() => rederive(layout, NormsStore, post))
     graft.operators.Par.run(chains.result(), parallelism = 5)
   }
 

@@ -1,8 +1,9 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{FileSystemException, Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max, xxhash64}
 
 /** Table maintenance — the small-file problem. A long-running ingest
@@ -168,9 +169,6 @@ object Maintenance {
   private def recoverPartition(dir: Path): Unit =
     if (Files.exists(dir.resolve(ManifestName))) finishCompaction(dir)
 
-  /** Depth-first recursive delete with the walk stream closed (shared by
-    * every loser-cleanup / staging-discard site in graft). deleteIfExists
-    * tolerates a concurrent cleaner racing on the same loser directory. */
   /** Recursive file-tree copy (REPLACE_EXISTING, so a retry after a
     * partial copy overwrites instead of throwing) — the index-clone
     * primitive the lifecycle queries use to work on a private copy of a
@@ -186,6 +184,9 @@ object Maintenance {
     }
   }
 
+  /** Depth-first recursive delete with the walk stream closed (shared by
+    * every loser-cleanup / staging-discard site in graft). deleteIfExists
+    * tolerates a concurrent cleaner racing on the same loser directory. */
   private[graft] def deleteRecursively(p: Path): Unit = if (Files.exists(p)) {
     val s = Files.walk(p)
     val all = try {
@@ -195,6 +196,124 @@ object Maintenance {
       buf.toSeq
     } finally s.close()
     all.reverse.foreach(Files.deleteIfExists(_))
+  }
+
+  // ---- The store-write protocol. Every maintained artifact writes its
+  // partitioned stores through exactly these three primitives:
+  //  - touched-partition overwrite (materializeForOverwrite +
+  //    commitOverwrite, or overwritePartitions for both halves): an
+  //    incremental merge rewrites only the partitions it touched;
+  //  - staged replace: a whole store re-derived (repair, stats swap);
+  //  - publish-if-absent: a store's first build or backfill.
+
+  /** The compute half of a touched-partition overwrite: repartition
+    * `merged` by the partition columns (one file per partition
+    * directory), checkpoint it (lineage cut off the files about to be
+    * replaced — a dynamic overwrite must never consume a plan over its
+    * own target) and collect its written partition values. No file under
+    * the target is touched, so a caller can overlap this half with
+    * another store's write (IndexCatalog.upsertInto's keymap phase A). */
+  private[graft] def materializeForOverwrite(partitionCols: Seq[String],
+                                             merged: DataFrame)
+      : (DataFrame, Set[Seq[Any]]) = {
+    val out = merged
+      .repartition(partitionCols.map(col): _*)
+      .localCheckpoint(true)
+    val written = out.select(partitionCols.map(col): _*).distinct()
+      .collect().map(_.toSeq).toSet
+    (out, written)
+  }
+
+  /** The commit half: dynamic-overwrite `out` (pre-partitioned and
+    * checkpointed) into `target`, then remove every `touched` partition
+    * absent from `written`. A merge that cannot empty a partition passes
+    * its touched set as `written` instead of collecting it. */
+  private[graft] def commitOverwrite(target: Path, partitionCols: Seq[String],
+                                     touched: Iterable[Seq[Any]],
+                                     out: DataFrame,
+                                     written: Set[Seq[Any]]): DataFrame = {
+    out.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(target.toString)
+    // Dynamic overwrite only rewrites partitions PRESENT in `out`. A
+    // touched partition whose every row was superseded or deleted is
+    // absent from `out` and would keep its stale directory — delete those
+    // explicitly. Directory names use Spark's own Hive-escaping (a string
+    // label 'a:b' lives in 'label=a%3Ab'; null in the default-partition
+    // dir), so the cleanup finds exactly the directories the writer
+    // created. Membership is Scala equality, so an Int-typed written
+    // value matches a Long-typed touched one.
+    touched.filterNot(written.contains).foreach { values =>
+      val dir = partitionCols.zip(values)
+        .map { case (c, v) =>
+          if (v == null) s"$c=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
+          else ExternalCatalogUtils.getPartitionPathString(c, String.valueOf(v))
+        }
+        .foldLeft(target)(_ resolve _)
+      deleteRecursively(dir)
+    }
+    out
+  }
+
+  /** Both halves of the touched-partition overwrite in sequence. */
+  private[graft] def overwritePartitions(target: Path,
+                                         partitionCols: Seq[String],
+                                         touched: Iterable[Seq[Any]],
+                                         merged: DataFrame): DataFrame = {
+    val (out, written) = materializeForOverwrite(partitionCols, merged)
+    commitOverwrite(target, partitionCols, touched, out, written)
+  }
+
+  /** [[overwritePartitions]] for a store partitioned by one column. */
+  private[graft] def overwritePartitions(target: String, partitionCol: String,
+                                         touched: Seq[Any],
+                                         merged: DataFrame): DataFrame =
+    overwritePartitions(Paths.get(target), Seq(partitionCol),
+      touched.map(Seq(_)), merged)
+
+  /** Staged replace of the whole store at `dest`: `write` fills a stage
+    * beside it, then the old tree moves aside, the stage moves in, and
+    * the old tree is deleted — [[rebuildIvf]]'s order, so readers find no
+    * store only between two renames, never across a recursive delete. A
+    * write that throws leaves the old store intact and its stage
+    * removed. The stage and aside paths are fixed: the caller holds the
+    * artifact's writer lease (or owns a private clone). */
+  private[graft] def replace(dest: Path)(write: String => Unit): Unit = {
+    val staged = dest.resolveSibling(dest.getFileName.toString + ".staged")
+    val aside = dest.resolveSibling(dest.getFileName.toString + ".old")
+    deleteRecursively(staged) // a killed run's uncommitted stage
+    try write(staged.toString)
+    catch { case e: Throwable => deleteRecursively(staged); throw e }
+    deleteRecursively(aside)
+    if (Files.exists(dest)) Files.move(dest, aside)
+    Files.move(staged, dest)
+    deleteRecursively(aside)
+  }
+
+  /** Publish the store at `dest` if it is absent: `write` fills a UNIQUE
+    * stage directory beside it, which one atomic rename installs.
+    * Concurrent first builders (unleased read paths backfilling the same
+    * sidecar, parallel sessions over one shared cache) never share a
+    * path: the loser's rename finds the store published and it stands
+    * down, discarding its stage (same derivation, so nothing is lost). A
+    * write that throws removes its own stage. Returns whether this call
+    * installed the store. */
+  private[graft] def publishIfAbsent(dest: Path)(write: String => Unit): Boolean = {
+    if (Files.exists(dest)) return false
+    Files.createDirectories(dest.getParent)
+    val stage = Files.createTempDirectory(dest.getParent,
+      dest.getFileName.toString + ".stage-")
+    try write(stage.toString)
+    catch { case e: Throwable => deleteRecursively(stage); throw e }
+    try { Files.move(stage, dest, StandardCopyOption.ATOMIC_MOVE); true }
+    catch {
+      // rename(2) onto a published directory fails with ENOTEMPTY, which
+      // the JDK reports as a bare FileSystemException
+      case _: FileSystemException if Files.exists(dest) =>
+        deleteRecursively(stage)
+        false
+    }
   }
 
   /** IVF index REBUILD — the actuator that closes the q_ivf_drift
@@ -216,12 +335,13 @@ object Maintenance {
     * through a staging directory and a directory swap, never a
     * read-and-overwrite of the live tree (Spark refuses self-overwrite;
     * a localCheckpoint would materialize the whole index in executor
-    * memory — fine at test SF, not at 100 TB). Crash honesty: the swap
-    * (retire `data`, promote staging) is two renames and is NOT atomic —
-    * a crash between them leaves `data-old` holding the intact previous
-    * tree for manual rollback; a real deployment runs the swap under a
-    * table-format transaction, which is exactly what the compaction
-    * manifest above simulates for the in-place case. */
+    * memory — fine at test SF, not at 100 TB): the staged [[replace]].
+    * Crash honesty: the swap (retire `data`, promote staging) is two
+    * renames and is NOT atomic — a crash between them leaves `data.old`
+    * holding the intact previous tree for manual rollback; a real
+    * deployment runs the swap under a table-format transaction, which is
+    * exactly what the compaction manifest above simulates for the
+    * in-place case. */
   def rebuildIvf(spark: SparkSession, basePath: String, name: String,
                  newCentroids: DataFrame): Unit = {
     import graft.operators.{IvfIndex, KnnSearch}
@@ -253,28 +373,23 @@ object Maintenance {
       .withColumnRenamed("cent_id", "bucket")
       .select(idx.columns.toIndexedSeq.map(col): _*)
     val dataDir = Paths.get(basePath, name, "data")
-    val staging = Paths.get(basePath, name, "data-rebuild")
-    val retired = Paths.get(basePath, name, "data-old")
-    deleteRecursively(staging)
-    reassigned
-      .repartition(layout.map(col): _*) // one file per partition directory
-      .write.mode("overwrite").partitionBy(layout: _*).parquet(staging.toString)
-    deleteRecursively(retired)
-    // every row is about to be re-bucketed: a keymap built against the
-    // old layout would describe pre-rebuild bucket assignments. Drop it
-    // BEFORE promoting staging to data — a kill between the swap and a
-    // post-swap keymap rewrite would otherwise leave the OLD keymap
-    // intact and later discovery would silently miss the moved rows'
-    // real partitions (stale duplicates survive, vacuum resurrects
-    // hidden rows). With the drop first, a crash anywhere in the window
-    // leaves NO keymap, and ensureKeymap backfills from the swapped-in
-    // tree on the next maintenance call — the same self-healing path
-    // the backfill discipline already provides.
     val kmKey = IndexCatalog.keymapKey(basePath, name)
-    IndexCatalog.dropKeymap(basePath, name)
-    Files.move(dataDir, retired)
-    Files.move(staging, dataDir)
-    deleteRecursively(retired)
+    replace(dataDir) { staging =>
+      reassigned
+        .repartition(layout.map(col): _*) // one file per partition directory
+        .write.mode("overwrite").partitionBy(layout: _*).parquet(staging)
+      // every row is about to be re-bucketed: a keymap built against the
+      // old layout would describe pre-rebuild bucket assignments. Drop it
+      // BEFORE promoting staging to data — a kill between the swap and a
+      // post-swap keymap rewrite would otherwise leave the OLD keymap
+      // intact and later discovery would silently miss the moved rows'
+      // real partitions (stale duplicates survive, vacuum resurrects
+      // hidden rows). With the drop first, a crash anywhere in the window
+      // leaves NO keymap, and ensureKeymap backfills from the swapped-in
+      // tree on the next maintenance call — the same self-healing path
+      // the backfill discipline already provides.
+      IndexCatalog.dropKeymap(basePath, name)
+    }
     // if the index was maintained before, rebuild the keymap from the
     // swapped-in tree now (one column-pruned scan, amortized into the
     // full rewrite this op already is — saves the next maintenance

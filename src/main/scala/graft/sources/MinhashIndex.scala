@@ -207,35 +207,14 @@ object MinhashIndex {
     // band fold and sig fold touch disjoint stores and both derive from
     // the checkpointed tomb/deadSigs frames — overlapped folds
     graft.operators.Par.run(Seq(
-      () => if (touched.nonEmpty) {
-        val bandStore = spark.read.parquet(layout.bandsPath)
-        val surv = bandStore.filter(col("bbucket").isin(touched: _*))
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .repartition(col("bbucket"))
-          .localCheckpoint(eager = true) // cut lineage off the overwritten files
-        val written = surv.select(col("bbucket")).distinct().as[Long].collect().toSet
-        surv.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bbucket").parquet(layout.bandsPath)
-        touched.filterNot(written.contains).foreach { b =>
-          Maintenance.deleteRecursively(
-            Paths.get(layout.bandsPath).resolve(s"bbucket=$b"))
-        }
-      },
-      () => {
-        val survSigs = sigStore.filter(col("sbucket").isin(sbuckets: _*))
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .repartition(col("sbucket"))
-          .localCheckpoint(eager = true)
-        val writtenS = survSigs.select(col("sbucket")).distinct().as[Long].collect().toSet
-        survSigs.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("sbucket").parquet(layout.sigsPath)
-        sbuckets.filterNot(writtenS.contains).foreach { b =>
-          Maintenance.deleteRecursively(
-            Paths.get(layout.sigsPath).resolve(s"sbucket=$b"))
-        }
-      }),
+      () => if (touched.nonEmpty)
+        Maintenance.overwritePartitions(layout.bandsPath, "bbucket", touched,
+          spark.read.parquet(layout.bandsPath)
+            .filter(col("bbucket").isin(touched: _*))
+            .join(broadcast(tomb), Seq("doc_id"), "left_anti")),
+      () => Maintenance.overwritePartitions(layout.sigsPath, "sbucket", sbuckets,
+        sigStore.filter(col("sbucket").isin(sbuckets: _*))
+          .join(broadcast(tomb), Seq("doc_id"), "left_anti"))),
       parallelism = 2)
   }
 
@@ -393,20 +372,18 @@ object MinhashIndex {
   /** REPAIR: re-derive the band store from the signature store — bands
     * are a pure function of sigs ([[featuresOf]]'s invariant), so a
     * drifted band store (the audit's bands_match_sigs) restores from one
-    * sig-store pass. Signatures are primary (min-hashes are not
+    * sig-store pass, swapped in by the staged [[Maintenance.replace]].
+    * Signatures are primary (min-hashes are not
     * derivable from bands); a damaged sig store needs the corpus. */
   private[graft] def rebuildDerived(spark: SparkSession, layout: Layout): Unit =
       WriterLease.withLease(leaseRoot(layout)) {
     val sigs = spark.read.parquet(layout.sigsPath)
       .select(col("doc_id"), col("sig"))
-    val staged = layout.bandsPath + ".staged"
-    Maintenance.deleteRecursively(Paths.get(staged))
-    Dedup.lshBands(sigs)
-      .withColumn("bbucket", bbucketCol(col("band_hash")))
-      .repartition(col("bbucket"))
-      .write.mode("overwrite").partitionBy("bbucket").parquet(staged)
-    Maintenance.deleteRecursively(Paths.get(layout.bandsPath))
-    Files.move(Paths.get(staged), Paths.get(layout.bandsPath))
+    Maintenance.replace(Paths.get(layout.bandsPath))(
+      Dedup.lshBands(sigs)
+        .withColumn("bbucket", bbucketCol(col("band_hash")))
+        .repartition(col("bbucket"))
+        .write.mode("overwrite").partitionBy("bbucket").parquet(_))
   }
 
   /** Q-index-audit: the engine auditing its own index fleet — one query,

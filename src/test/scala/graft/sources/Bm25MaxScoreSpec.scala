@@ -4,6 +4,8 @@ import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
+import scala.jdk.CollectionConverters._
+
 /** Gates for MaxScore-pruned BM25 serving (InvertedIndex.bm25MaxScore):
   * the pruned plan equals the unpruned one bit-for-bit through every
   * maintenance state (fresh build, post-upsert, pending tombstones,
@@ -126,5 +128,30 @@ class Bm25MaxScoreSpec extends SparkSpecBase with Matchers {
     InvertedIndex.auditFrame(spark, layout).collect()
       .map(r => (r.getString(1), r.getLong(2))).toMap
       .apply("impacts_bound_postings") shouldBe 0L
+  }
+
+  test("two first readers backfilling the impacts sidecar at once both serve exact results; the audit stays clean") {
+    val layout = InvertedIndex.cloneIndex(spark, sfDir, "maxscore-race")
+    val root = java.nio.file.Paths.get(layout.dataPath).getParent
+    Maintenance.deleteRecursively(root.resolve("impacts"))
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val results = try {
+      (1 to 2).map(_ => pool.submit(new java.util.concurrent.Callable[Seq[(Long, Double)]] {
+        def call(): Seq[(Long, Double)] = {
+          barrier.await()
+          rows(InvertedIndex.maxScorePlan(spark, layout)._2)
+        }
+      })).map(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdown()
+    results(0) shouldBe results(1)
+    results(0) shouldBe rows(InvertedIndex.bm25Over(spark, layout))
+    InvertedIndex.auditFrame(spark, layout).collect()
+      .map(r => (r.getString(1), r.getLong(2))).filter(_._2 != 0L) shouldBe empty
+    // the losing publisher discarded its stage
+    val s = java.nio.file.Files.list(root)
+    try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("impacts")).toSeq shouldBe Seq("impacts")
+    finally s.close()
   }
 }

@@ -125,4 +125,91 @@ class MaintenanceSpec extends SparkSpecBase with Matchers {
     ev.filter(col("ts") < cutoff).count() should be > 0L
     ev.filter(col("ts") >= cutoff).count() should be > 0L
   }
+
+  private def entries(dir: java.nio.file.Path): Seq[String] = {
+    val s = java.nio.file.Files.list(dir)
+    try {
+      val it = s.iterator()
+      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (it.hasNext) buf += it.next().getFileName.toString
+      buf.sorted.toSeq
+    } finally s.close()
+  }
+
+  /** `store` (id, p) holds ids 1, 2, 3 in three partitions; the merge
+    * touches the first two and keeps only id 2, so the first partition's
+    * directory `emptiedDir` must go, id 2 must be rewritten and id 3's
+    * untouched partition must stay. `touched` may type the partition
+    * values differently from the store's column. */
+  private def emptiedPartitionRemoved(store: org.apache.spark.sql.DataFrame,
+                                      touched: Seq[Any],
+                                      emptiedDir: String): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-overwrite").resolve("t")
+    store.write.partitionBy("p").parquet(dir.toString)
+    java.nio.file.Files.exists(dir.resolve(emptiedDir)) shouldBe true
+    Maintenance.overwritePartitions(dir, Seq("p"), touched.map(Seq(_)),
+      store.filter(col("id") === 2L))
+    java.nio.file.Files.exists(dir.resolve(emptiedDir)) shouldBe false
+    spark.read.parquet(dir.toString).select(col("id")).collect()
+      .map(_.getLong(0)).sorted.toSeq shouldBe Seq(2L, 3L)
+  }
+
+  test("the touched-partition overwrite removes an emptied partition for int, long, escaped and null values") {
+    import spark.implicits._
+    // an Int-typed column with Long touched values and the reverse: the
+    // written-set membership must match across the two
+    emptiedPartitionRemoved(Seq((1L, 1), (2L, 2), (3L, 3)).toDF("id", "p"),
+      Seq(1L, 2L), "p=1")
+    emptiedPartitionRemoved(Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("id", "p"),
+      Seq(1, 2), "p=1")
+    // Spark's own path escaping: 'a:b' lives in 'p=a%3Ab'
+    emptiedPartitionRemoved(Seq((1L, "a:b"), (2L, "c"), (3L, "d")).toDF("id", "p"),
+      Seq("a:b", "c"), "p=a%3Ab")
+    // a null value lives in the default-partition directory
+    emptiedPartitionRemoved(
+      Seq((1L, null: String), (2L, "x"), (3L, "y")).toDF("id", "p"),
+      Seq(null, "x"), "p=__HIVE_DEFAULT_PARTITION__")
+  }
+
+  test("a replace whose write throws leaves the old store intact and no stage behind") {
+    import spark.implicits._
+    val parent = java.nio.file.Files.createTempDirectory("graft-replace")
+    val dest = parent.resolve("store")
+    Seq(1L, 2L).toDF("id").write.parquet(dest.toString)
+    intercept[IllegalStateException] {
+      Maintenance.replace(dest) { stage =>
+        Seq(9L).toDF("id").write.parquet(stage)
+        throw new IllegalStateException("write failed")
+      }
+    }
+    spark.read.parquet(dest.toString).as[Long].collect().sorted.toSeq shouldBe Seq(1L, 2L)
+    entries(parent) shouldBe Seq("store")
+    // a replace that completes swaps the new rows in, leaving nothing aside
+    Maintenance.replace(dest)(Seq(7L).toDF("id").write.parquet(_))
+    spark.read.parquet(dest.toString).as[Long].collect().toSeq shouldBe Seq(7L)
+    entries(parent) shouldBe Seq("store")
+  }
+
+  test("a publish into an existing path stands down and keeps the first copy") {
+    import spark.implicits._
+    val parent = java.nio.file.Files.createTempDirectory("graft-publish")
+    val dest = parent.resolve("store")
+    // a concurrent builder publishes while this one is still writing: the
+    // loser's rename finds the store and discards its own stage
+    Maintenance.publishIfAbsent(dest) { stage =>
+      Maintenance.publishIfAbsent(dest)(
+        Seq(1L).toDF("id").write.mode("overwrite").parquet(_)) shouldBe true
+      Seq(2L).toDF("id").write.mode("overwrite").parquet(stage)
+    } shouldBe false
+    spark.read.parquet(dest.toString).as[Long].collect().toSeq shouldBe Seq(1L)
+    entries(parent) shouldBe Seq("store")
+    // once published, a later call writes nothing
+    Maintenance.publishIfAbsent(dest)(_ => fail("an existing store was rebuilt")) shouldBe false
+    // a failed first build removes its stage and publishes nothing
+    val other = parent.resolve("other")
+    intercept[IllegalStateException] {
+      Maintenance.publishIfAbsent(other)(_ => throw new IllegalStateException("write failed"))
+    }
+    entries(parent) shouldBe Seq("store")
+  }
 }

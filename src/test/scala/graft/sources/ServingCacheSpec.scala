@@ -105,4 +105,16 @@ class ServingCacheSpec extends SparkSpecBase with Matchers {
       .collect().map(_.getLong(0)).toSet shouldBe Set(1L, 7L)
     IndexCatalog.hasKeymap(base, "nk") shouldBe false
   }
+
+  test("isTornRead recognizes each torn-read shape, nested or not, and nothing else") {
+    ServingCache.isTornRead(new java.io.FileNotFoundException("part-0.parquet")) shouldBe true
+    ServingCache.isTornRead(new java.nio.file.NoSuchFileException("part-0.parquet")) shouldBe true
+    ServingCache.isTornRead(new RuntimeException(
+      "[FAILED_READ_FILE.FILE_NOT_EXIST] File part-0.parquet does not exist")) shouldBe true
+    ServingCache.isTornRead(new RuntimeException("job aborted",
+      new RuntimeException("task failed",
+        new java.nio.file.NoSuchFileException("part-0.parquet")))) shouldBe true
+    ServingCache.isTornRead(new RuntimeException("job aborted",
+      new IllegalStateException("not a missing file"))) shouldBe false
+  }
 }
